@@ -13,14 +13,15 @@ Here the same chain is *compiled into a Catalyst logical plan*:
 
 * relational steps become DataFrame transformations (whole-stage
   codegen, predicate pushdown, column pruning — all free),
-* arbitrary-Python steps become Arrow-batched ``mapInPandas`` stages
-  with LibMR's per-record error channel
-  (``/root/reference/src/mr.c:954-957``: a step error turns the record
-  into an ErrorRecord and the pipeline keeps running),
+* each run of consecutive arbitrary-Python map/filter steps becomes
+  ONE Arrow-batched ``mapInArrow`` stage with LibMR's per-record error
+  channel (reference ``src/mr.c:954-957``: a step error turns the
+  record into an ErrorRecord that travels in-band to the end),
 * ``reshuffle`` is a hash repartition (the reference routes records by
   CRC16 slot — ``/root/reference/src/mr.c:736-785``),
-* ``collect`` gathers to one task (the reference gathers to the
-  initiating shard — ``/root/reference/src/mr.c:812-862``).
+* ``collect`` makes a following accumulate a global fold on one task
+  (the reference gathers to the initiating shard —
+  ``src/mr.c:812-862``).
 
 Everything the reference hand-builds for distribution — topology,
 serialization, retries, completion barriers (~70% of its code) — is
@@ -32,14 +33,15 @@ from __future__ import annotations
 import dataclasses
 import threading
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any, Callable, Iterator
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+import pyarrow as pa
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
-
-from pyspark.sql.types import StructType
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import IntegralType, MapType, StringType, StructField, StructType
 
 from .registry import GLOBAL_REGISTRY, PyAccumulator, Registry, StepImpl, StepType
 
@@ -120,107 +122,94 @@ def _resolve(registry: Registry, step_type: StepType, name_or_fn, relational_def
     )
 
 
-def _py_map_stage(df: DataFrame, fn: Callable, args: Any, out_schema: str | None) -> DataFrame:
-    """Wrap a per-record Python mapper in mapInPandas with the error
-    channel. Output = mapped columns (nulled on error) + ERROR_COL."""
-    in_cols = [c for c in df.columns if c != ERROR_COL]
-    if out_schema is None:
-        out_fields = ", ".join(f"`{c}` {t}" for c, t in df.dtypes if c != ERROR_COL)
-    else:
-        out_fields = out_schema
-    full_schema = f"{out_fields}, {ERROR_COL} string"
-    # parse the DDL rather than splitting on ',' — field types like
-    # decimal(18,2) or map<string,int> contain commas
-    out_cols = [f.name for f in StructType.fromDDL(out_fields).fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_rows = []
-            had_err = ERROR_COL in pdf.columns
-            for rec in pdf.to_dict("records"):
-                err = rec.pop(ERROR_COL, None) if had_err else None
-                if err is not None:
-                    out_rows.append({**{c: None for c in out_cols}, ERROR_COL: err})
-                    continue
-                try:
-                    mapped = fn(rec, args) if args is not None else fn(rec)
-                    out_rows.append({**{c: mapped.get(c) for c in out_cols}, ERROR_COL: None})
-                except Exception as e:  # record-level error, keep going
-                    out_rows.append({**{c: None for c in out_cols}, ERROR_COL: str(e)})
-            yield pd.DataFrame(out_rows, columns=[*out_cols, ERROR_COL])
-
-    return df.select(*in_cols, *( [F.col(ERROR_COL)] if ERROR_COL in df.columns else [] )).mapInPandas(
-        run, schema=full_schema
+def _py_stage(df: DataFrame, steps: list[_Step], acc: PyAccumulator | None = None) -> DataFrame:
+    """ONE ``mapInArrow`` stage pulling each record once through a run of
+    Python map/filter steps (reference src/mr.c:926-970), or a fold
+    (:787-810) that emits one row per non-empty task. A step error makes
+    the record an error record that skips later steps and passes through
+    in-band (:954-957); a map's output is projected to its columns."""
+    fields = [f for f in df.schema.fields if f.name != ERROR_COL]
+    map_cols = [f.name for f in fields if isinstance(f.dataType, MapType)]
+    chain = []  # (fn, args, output columns of a map | None for a filter)
+    for s in steps:
+        cols = None
+        if s.step_type is StepType.MAPPER:
+            if s.impl.out_schema is not None:
+                # parse the DDL rather than splitting on ',' — field types
+                # like decimal(18,2) or map<string,int> contain commas
+                fields = StructType.fromDDL(s.impl.out_schema).fields
+            cols = [f.name for f in fields]
+        chain.append((s.impl.fn, s.args, cols))
+    if acc is not None:
+        fields = StructType.fromDDL(acc.schema).fields
+    # every output column is nullable: an error record nulls them all
+    out_schema = StructType(
+        [*(StructField(f.name, f.dataType) for f in fields), StructField(ERROR_COL, StringType())]
     )
+    arrow_schema = to_arrow_schema(out_schema)
+    int_cols = [f.name for f in fields if isinstance(f.dataType, IntegralType)]
 
+    def to_batch(rows: list[dict]) -> pa.RecordBatch:
+        # Arrow would silently truncate a fractional float in an integer column
+        for c in int_cols:
+            for r in rows:
+                v = r.get(c)
+                if isinstance(v, float) and not v.is_integer():
+                    raise ExecutionError(f"column {c!r}: {v!r} is not an integer")
+        return pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
 
-def _py_filter_stage(df: DataFrame, fn: Callable, args: Any) -> DataFrame:
-    """Per-record Python predicate with the error channel; loops rows
-    like the reference's pipelined filter (/root/reference/src/mr.c:864-889)."""
-    cols = [c for c in df.columns if c != ERROR_COL]
-    schema = ", ".join(f"`{c}` {t}" for c, t in df.dtypes if c != ERROR_COL) + f", {ERROR_COL} string"
+    def through(rec: dict) -> dict | None:
+        """``rec`` after every step, or None once a filter drops it."""
+        for fn, args, cols in chain:
+            out = fn(rec, args) if args is not None else fn(rec)
+            if cols is not None:
+                rec = {c: out.get(c) for c in cols}
+            elif not out:
+                return None
+        return rec
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_rows = []
-            had_err = ERROR_COL in pdf.columns
-            for rec in pdf.to_dict("records"):
-                err = rec.pop(ERROR_COL, None) if had_err else None
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        state, seen = acc.zero if acc is not None else None, False
+        for batch in batches:
+            rows = []
+            for rec in batch.to_pylist():
+                err = rec.pop(ERROR_COL, None)
+                if err is None:
+                    for c in map_cols:  # Arrow hands maps over as (key, value) lists
+                        if rec[c] is not None:
+                            rec[c] = dict(rec[c])
+                    try:
+                        rec = through(rec)
+                    except Exception as e:  # record-level error, keep going
+                        err = str(e)
                 if err is not None:
-                    out_rows.append({**{c: None for c in cols}, ERROR_COL: err})
+                    rows.append({ERROR_COL: err})
+                elif rec is None:
                     continue
-                try:
-                    keep = fn(rec, args) if args is not None else fn(rec)
-                    if keep:
-                        out_rows.append({**rec, ERROR_COL: None})
-                except Exception as e:
-                    out_rows.append({**{c: None for c in cols}, ERROR_COL: str(e)})
-            yield pd.DataFrame(out_rows, columns=[*cols, ERROR_COL])
-
-    return df.mapInPandas(run, schema=schema)
-
-
-def _py_accumulate_stage(df: DataFrame, acc: PyAccumulator, global_fold: bool) -> DataFrame:
-    """LibMR accumulate: streaming fold, one emitted record per shard;
-    empty input emits nothing (/root/reference/src/mr.c:787-810,794-798).
-
-    Per-partition fold via mapInPandas; a global fold (accumulate after
-    collect) first gathers to a single partition, mirroring the
-    reference's collect-then-fold-at-initiator.
-    """
-    if global_fold:
-        df = df.coalesce(1) if df.rdd.getNumPartitions() > 1 else df
-    cols = [c for c in df.columns if c != ERROR_COL]
-    schema = acc.schema
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        state = acc.zero
-        seen = False
-        for pdf in batches:
-            had_err = ERROR_COL in pdf.columns
-            for rec in pdf.to_dict("records"):
-                if had_err and rec.pop(ERROR_COL, None) is not None:
-                    continue  # error records bypass the fold
-                seen = True
-                state = acc.fn(state, rec)
+                elif acc is None:
+                    rows.append(rec)
+                else:
+                    state, seen = acc.fn(state, rec), True
+            yield to_batch(rows)
         if seen:
             row = acc.finish(state) if acc.finish else state
             if not isinstance(row, dict):
                 raise ExecutionError("PyAccumulator must fold to a dict (or provide finish())")
-            yield pd.DataFrame([row])
+            yield to_batch([row])
 
-    return df.select(*cols).mapInPandas(run, schema=schema)
+    return df.mapInArrow(run, out_schema)
 
 
 class Execution:
-    """A compiled pipeline: a results DataFrame plus lazily-evaluated
-    error branches (the reference's in-band ErrorRecord list,
-    ``/root/reference/src/mr.c:954-957``)."""
+    """A compiled pipeline: one DataFrame whose error records travel
+    in-band in ``ERROR_COL`` (reference ``src/mr.c:954-957``).
+    ``reread`` are the frames the plan reads twice (clean and error
+    rows); ``run()`` persists them so each step runs once per record."""
 
-    def __init__(self, spark: SparkSession, df: DataFrame, error_dfs: list[DataFrame], max_idle_ms: int | None):
+    def __init__(self, spark: SparkSession, df: DataFrame, reread: list[DataFrame], max_idle_ms: int | None):
         self.spark = spark
         self._df = df
-        self._error_dfs = error_dfs
+        self._reread = reread
         self.max_idle_ms = max_idle_ms
         self.execution_id = uuid.uuid4().hex  # ≈ shardId+counter id (/root/reference/src/mr.c:452-464)
 
@@ -230,17 +219,6 @@ class Execution:
             return self._df.filter(F.col(ERROR_COL).isNull()).drop(ERROR_COL)
         return self._df
 
-    def errors_dataframe(self) -> DataFrame | None:
-        branches = list(self._error_dfs)
-        if ERROR_COL in self._df.columns:
-            branches.append(self._df.filter(F.col(ERROR_COL).isNotNull()).select(F.col(ERROR_COL).alias("error")))
-        if not branches:
-            return None
-        out = branches[0]
-        for b in branches[1:]:
-            out = out.unionByName(b)
-        return out
-
     def run(self) -> ExecutionResult:
         """Execute and gather ``(results, errors)`` to the driver —
         the reference's done-callback (/root/reference/src/mr.c:1014-1057).
@@ -248,22 +226,28 @@ class Execution:
         kills idle executions after maxIdle — /root/reference/src/mr.c:26-28,1306-1331).
         """
         if self.max_idle_ms is None:
-            return ExecutionResult(self._collect_results(), self._collect_errors())
-        return run_with_job_group_timeout(
-            self.spark,
-            lambda: ExecutionResult(self._collect_results(), self._collect_errors()),
-            self.max_idle_ms,
-            MAX_IDLE_ERROR,
-        )
+            return self._evaluate()
+        return run_with_job_group_timeout(self.spark, self._evaluate, self.max_idle_ms, MAX_IDLE_ERROR)
 
-    def _collect_results(self) -> list:
-        return self.dataframe().collect()
-
-    def _collect_errors(self) -> list[str]:
-        edf = self.errors_dataframe()
-        if edf is None:
-            return []
-        return [r[0] for r in edf.collect()]
+    def _evaluate(self) -> ExecutionResult:
+        """One action over the final frame; results and errors are split
+        on the driver."""
+        # frames the caller cached stay cached after the run
+        owned = [d for d in self._reread if d.storageLevel == StorageLevel.NONE]
+        for d in owned:
+            d.persist()
+        try:
+            rows = self._df.collect()
+        finally:
+            for d in owned:
+                d.unpersist()
+        cols = self._df.columns
+        if ERROR_COL not in cols:
+            return ExecutionResult(rows, [])
+        i = cols.index(ERROR_COL)
+        result_row = Row(*cols[:i], *cols[i + 1 :])
+        results = [result_row(*r[:i], *r[i + 1 :]) for r in rows if r[i] is None]
+        return ExecutionResult(results, [r[i] for r in rows if r[i] is not None])
 
 
 class ExecutionBuilder:
@@ -321,15 +305,14 @@ class ExecutionBuilder:
         reference routes by each record's hashTag slot
         (/root/reference/src/mr.c:736-785); Murmur3 hash partitioning
         is the Spark-native equivalent (SURVEY §1.4)."""
-        s = _Step(StepType.RESHUFFLE, None, num_partitions, None)
-        s.key = key
-        self._steps.append(s)
+        self._steps.append(_Step(StepType.RESHUFFLE, None, num_partitions, None, key))
         return self
 
     def collect(self):
         """Gather to the initiator (/root/reference/src/mr.c:812-862).
-        Compiled as: global scope for a following accumulate; a
-        single-partition gather for Python steps that follow."""
+        Scopes the accumulates that follow: each becomes a global fold
+        over one gathered partition. Map and filter steps after it keep
+        running in parallel."""
         self._steps.append(_Step(StepType.COLLECT, None, None, None))
         return self
 
@@ -373,78 +356,77 @@ class ExecutionBuilder:
     # -- compile -------------------------------------------------------
     def create_execution(self) -> Execution:
         df: DataFrame | None = None
-        error_dfs: list[DataFrame] = []
+        pending: list[_Step] = []  # consecutive Python map/filter steps
+        reread: list[DataFrame] = []
         collected = False
 
-        def split_errors(d: DataFrame) -> DataFrame:
-            """Divert error rows out of the main stream before a step
-            that collapses/changes schema."""
-            if ERROR_COL in d.columns:
-                error_dfs.append(d.filter(F.col(ERROR_COL).isNotNull()).select(F.col(ERROR_COL).alias("error")))
-                return d.filter(F.col(ERROR_COL).isNull()).drop(ERROR_COL)
-            return d
+        def on_clean_rows(d: DataFrame, step: Callable[[DataFrame], DataFrame]) -> DataFrame:
+            """Run a relational step that reshapes rows on the clean rows
+            only; error rows rejoin the stream in-band after it."""
+            if ERROR_COL not in d.columns:
+                return step(d)
+            reread.append(d)
+            out = step(d.filter(F.col(ERROR_COL).isNull()).drop(ERROR_COL))
+            errors = d.filter(F.col(ERROR_COL).isNotNull()).select(ERROR_COL)
+            return out.withColumn(ERROR_COL, F.lit(None).cast("string")).unionByName(
+                errors, allowMissingColumns=True
+            )
 
         for s in self._steps:
             impl = s.impl
+            if s.step_type in (StepType.MAPPER, StepType.FILTER) and not impl.relational:
+                pending.append(s)
+                continue
+            if pending:
+                df, pending = _py_stage(df, pending), []
             if s.step_type is StepType.READER:
                 df = impl.fn(self.spark, s.args)
             elif s.step_type is StepType.MAPPER:
-                if impl.relational:
-                    clean = split_errors(df)
-                    df = impl.fn(clean, s.args) if s.args is not None else impl.fn(clean)
-                else:
-                    df = _py_map_stage(df, impl.fn, s.args, impl.out_schema)
+                df = on_clean_rows(df, lambda d: impl.fn(d, s.args) if s.args is not None else impl.fn(d))
             elif s.step_type is StepType.FILTER:
-                if impl.relational:
-                    pred = impl.fn(df, s.args) if s.args is not None else impl.fn(df)
-                    if not isinstance(pred, Column):
-                        raise ExecutionError("relational filter must return a Column predicate")
-                    if ERROR_COL in df.columns:
-                        pred = pred | F.col(ERROR_COL).isNotNull()
-                    df = df.filter(pred)
-                else:
-                    df = _py_filter_stage(df, impl.fn, s.args)
+                pred = impl.fn(df, s.args) if s.args is not None else impl.fn(df)
+                if not isinstance(pred, Column):
+                    raise ExecutionError("relational filter must return a Column predicate")
+                if ERROR_COL in df.columns:
+                    pred = pred | F.col(ERROR_COL).isNotNull()
+                df = df.filter(pred)
             elif s.step_type is StepType.RESHUFFLE:
-                clean = df
                 n = s.args
                 if s.key is None:
-                    df = clean.repartition(n) if n else clean.repartition(self.spark.sparkContext.defaultParallelism)
+                    df = df.repartition(n) if n else df.repartition(self.spark.sparkContext.defaultParallelism)
                 else:
                     keys = s.key if isinstance(s.key, (list, tuple)) else [s.key]
                     keys = [F.col(k) if isinstance(k, str) else k for k in keys]
-                    df = clean.repartition(n, *keys) if n else clean.repartition(*keys)
+                    df = df.repartition(n, *keys) if n else df.repartition(*keys)
             elif s.step_type is StepType.COLLECT:
                 collected = True
+            elif s.step_type is StepType.ACCUMULATOR and not impl.relational:
+                # a global fold gathers through a shuffle, so the steps
+                # before it keep their parallelism
+                df = _py_stage(df.repartition(1) if collected else df, [], impl.fn)
             elif s.step_type is StepType.ACCUMULATOR:
-                if impl.relational:
-                    clean = split_errors(df)
-                    exprs = impl.fn(s.args) if s.args is not None else impl.fn()
-                    if isinstance(exprs, Column):
-                        exprs = [exprs]
-                    if collected:
-                        # Global agg that emits NOTHING on empty input
-                        # (/root/reference/src/mr.c:794-798): grouped agg
-                        # on a constant yields 0 rows when input is empty.
-                        df = clean.groupBy(F.lit(1).alias("__g__")).agg(*exprs).drop("__g__")
-                    else:
-                        # per-shard partial: one row per non-empty partition
-                        df = (
-                            clean.withColumn("__pid__", F.spark_partition_id())
-                            .groupBy("__pid__")
-                            .agg(*exprs)
-                            .drop("__pid__")
-                        )
+                exprs = impl.fn(s.args) if s.args is not None else impl.fn()
+                if isinstance(exprs, Column):
+                    exprs = [exprs]
+                if collected:
+                    # Global agg that emits NOTHING on empty input
+                    # (reference src/mr.c:794-798): grouped agg
+                    # on a constant yields 0 rows when input is empty.
+                    df = on_clean_rows(df, lambda d: d.groupBy(F.lit(1).alias("__g__")).agg(*exprs).drop("__g__"))
                 else:
-                    clean = split_errors(df)
-                    df = _py_accumulate_stage(clean, impl.fn, global_fold=collected)
+                    # per-shard partial: one row per non-empty partition
+                    df = on_clean_rows(
+                        df,
+                        lambda d: d.withColumn("__pid__", F.spark_partition_id())
+                        .groupBy("__pid__")
+                        .agg(*exprs)
+                        .drop("__pid__"),
+                    )
             else:
                 raise ExecutionError(f"unhandled step {s.step_type}")
-
-        if collected and df is not None and ERROR_COL not in df.columns:
-            # "collect then keep processing" for python stages happens on
-            # one task; pure-relational chains need no physical gather.
-            pass
-        return Execution(self.spark, df, error_dfs, self._max_idle_ms)
+        if pending:
+            df = _py_stage(df, pending)
+        return Execution(self.spark, df, reread, self._max_idle_ms)
 
     def run(self) -> ExecutionResult:
         return self.create_execution().run()

@@ -15,8 +15,9 @@ Two tiers of step implementation:
 * **Relational** — the callable manipulates DataFrames/Columns and is
   compiled straight into the Catalyst plan (fast path: whole-stage
   codegen, pushdown, pruning all apply).
-* **Python** — the callable is an arbitrary per-record function, run
-  via Arrow-batched ``mapInPandas`` with LibMR's per-record error
+* **Python** — the callable is an arbitrary per-record function. Each
+  run of consecutive Python map/filter steps compiles to one
+  Arrow-batched ``mapInArrow`` stage with LibMR's per-record error
   channel (a failing record becomes an error-record, the pipeline keeps
   running — ``/root/reference/src/mr.c:954-957``).
 """
@@ -50,7 +51,7 @@ class StepImpl:
       filter  (rel) : fn(df, args) -> Column (predicate)
       filter  (py)  : fn(row_dict, args) -> bool            [error channel]
       accumulator (rel): fn(args) -> list[Column]  (agg exprs, aliased)
-      accumulator (py) : PyAccumulator instance (zero/acc/merge/schema)
+      accumulator (py) : PyAccumulator instance (zero/fn/schema/finish)
       remote_task   : fn(spark_or_iter, args) -> Any
     """
 
@@ -70,19 +71,19 @@ class PyAccumulator:
 
     Must be commutative + associative to be deterministic — the same
     requirement the reference documents, since record arrival order is
-    nondeterministic there too (SURVEY §2.3). ``merge`` combines two
-    partial accumulators (map-side combine); defaults to ``fn`` applied
-    to the accumulator as if it were a record when shapes allow.
+    nondeterministic there too (SURVEY §2.3). The fold runs once per
+    task: per shard, or over the one gathered partition after
+    ``collect()``; there is no map-side combine.
 
     ``schema`` is the DDL schema of the single emitted row, e.g.
-    ``"count bigint"``. An empty input stream emits *nothing*, not a
-    zero row (``/root/reference/src/mr.c:794-798``).
+    ``"count bigint"``; ``finish`` turns the final state into that row
+    when the state is not already a dict. An empty input stream emits
+    *nothing*, not a zero row (reference ``src/mr.c:794-798``).
     """
 
     zero: Any
     fn: Callable[[Any, dict], Any]
     schema: str
-    merge: Callable[[Any, Any], Any] | None = None
     finish: Callable[[Any], dict] | None = None
 
 
@@ -166,10 +167,6 @@ def _count_fold(acc: dict, _rec: dict) -> dict:
     return {"count": acc["count"] + 1}
 
 
-def _count_merge(a: dict, b: dict) -> dict:
-    return {"count": a["count"] + b["count"]}
-
-
 #: Parity with the reference's CountAccumulator
 #: (/root/reference/tests/mr_test_module/src/lib.rs:541-560): usable by
 #: name, `.accumulate("count")`, like `lmr_count_key`
@@ -178,7 +175,7 @@ GLOBAL_REGISTRY.register(
     StepImpl(
         name="count",
         step_type=StepType.ACCUMULATOR,
-        fn=PyAccumulator(zero={"count": 0}, fn=_count_fold, merge=_count_merge, schema="count bigint"),
+        fn=PyAccumulator(zero={"count": 0}, fn=_count_fold, schema="count bigint"),
         relational=False,
     )
 )

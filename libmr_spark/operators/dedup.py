@@ -2028,9 +2028,14 @@ def _resolve_remap(remap: DataFrame, max_iterations: int = 50) -> DataFrame:
     driver in one pass — every store commit/serve was paying ~2 Spark
     jobs per hop round for a table of a few hundred rows (guide §2.4:
     remove work the operation never needed).  Same (old, root) rows
-    either way."""
-    r = remap.select("old", "new").localCheckpoint(eager=True)
-    if r.count() <= _CC_DRIVER_MAX_EDGES:
+    either way; both drop self-rows (old == new) and raise ``ValueError``
+    on an ``old`` listed twice (a forest gives each node one parent)."""
+    r = remap.select("old", "new").filter(F.col("old") != F.col("new")).localCheckpoint(eager=True)
+    n, n_old = r.agg(F.count(F.lit(1)), F.countDistinct("old")).first()
+    if n != n_old:
+        r.unpersist()
+        raise ValueError(f"_resolve_remap: {n - n_old} old id(s) have more than one new id")
+    if n <= _CC_DRIVER_MAX_EDGES:
         rows = r.collect()
         r.unpersist()
         parent = {row["old"]: row["new"] for row in rows}

@@ -37,6 +37,8 @@ compliance log wants."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 
 from . import dedup as DD
@@ -86,22 +88,22 @@ def takedown_everywhere(
     # re-runs, completed stores no-op.
     from .matview import matview_takedown
 
-    tasks: list[tuple[str, object]] = []
+    tasks: list[tuple[str, str, object]] = []  # (name, store path, delete)
     for name, (path, tables) in (table_stores or {}).items():
         tasks.append((
-            name,
+            name, path,
             lambda p=path, t=tables: DD.delete_from_incremental_store(
                 spark, p, ids, id_col=id_col, tables=t
             ),
         ))
     for name, path in cluster_stores or []:
         tasks.append((
-            name,
+            name, path,
             lambda p=path: DD.delete_from_cluster_store(spark, p, ids, id_col=id_col),
         ))
     for name, path in span_stores or []:
         tasks.append((
-            name,
+            name, path,
             lambda p=path: DD.delete_from_span_store(spark, p, ids, id_col=id_col),
         ))
     for entry in matview_stores or []:
@@ -111,7 +113,7 @@ def takedown_everywhere(
         # raises rather than silently retain victim-derived rows)
         name, path, *rest = entry
         tasks.append((
-            name,
+            name, path,
             lambda p=path, v=(rest[0] if rest else None): matview_takedown(
                 spark, p, ids, id_col=id_col, views=v
             ),
@@ -119,18 +121,20 @@ def takedown_everywhere(
     for name, path in vocab_stores or []:
         ev = victims.select(id_col, text_col).withColumn("sign", F.lit(-1))
         tasks.append((
-            name,
+            name, path,
             lambda p=path, e=ev: pmi_store_ingest(
                 spark, p, e, text_col=text_col, id_col=id_col
             ).count(),
         ))
 
-    if len(tasks) <= 1:
-        return {name: fn() for name, fn in tasks}
+    # tasks naming one store path would contend on its rewrite lock
+    paths = {os.path.realpath(p) for _, p, _ in tasks}
+    if len(tasks) <= 1 or len(paths) < len(tasks):
+        return {name: fn() for name, _, fn in tasks}
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=min(3, len(tasks))) as pool:
-        futs = [(name, pool.submit(fn)) for name, fn in tasks]
+        futs = [(name, pool.submit(fn)) for name, _, fn in tasks]
         return {name: f.result() for name, f in futs}
 
 
@@ -161,7 +165,6 @@ def takedown_with_txlog(
     :func:`takedown_everywhere`.  ``_crash_after`` (tests only) raises
     after N family deletes to simulate the coordinator dying."""
     import json
-    import os
 
     os.makedirs(txlog_dir, exist_ok=True)
     vic_path = os.path.join(txlog_dir, f"{request_id}.victims")
@@ -199,7 +202,6 @@ def takedown_with_txlog(
 
 def _run_intent(spark, txlog_dir: str, request_id: str, _crash_after=None) -> dict:
     import json
-    import os
 
     intent_path = os.path.join(txlog_dir, f"{request_id}.intent")
     with open(intent_path) as f:
@@ -248,8 +250,6 @@ def recover_takedowns(spark, txlog_dir: str) -> dict:
     called at coordinator startup.  Returns {request_id: audit} for
     the requests recovered this pass (idempotent per-store deletes
     make the replay exactly-once in effect)."""
-    import os
-
     recovered = {}
     if not os.path.isdir(txlog_dir):
         return recovered

@@ -989,9 +989,10 @@ def q14_promo_revenue(spark, sf_dir):
 @defquery(
     "kv_collect_then_map",
     f"SELECT key, length(value) AS value_len FROM {KV_SQL} kv WHERE type = 'string'",
-    "collect-then-continue: python map AFTER collect runs on the gathered "
-    "single partition (the reference keeps stepping after gather at the "
-    "initiator — tests/mr_test_module/src/lib.rs:255-258)",
+    "collect-then-continue: python map AFTER collect (the reference keeps "
+    "stepping after gather at the initiator — "
+    "tests/mr_test_module/src/lib.rs:255-258); collect() only scopes a "
+    "following accumulate, so the map keeps running in parallel",
 )
 def kv_collect_then_map(spark, sf_dir):
     return (

@@ -101,6 +101,16 @@ def _ship_package(spark: SparkSession) -> None:
     spark.sparkContext.addPyFile(zpath)
 
 
+def _default_driver_memory() -> str:
+    """Half of physical memory, capped at 48g: a heap sized past RAM gets
+    the JVM OOM-killed instead of garbage-collected."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no sysconf on this platform
+        return "48g"
+    return f"{min(48 << 10, total // 2 >> 20)}m"
+
+
 def get_spark(
     app_name: str = "libmr_spark",
     master: str | None = None,
@@ -146,6 +156,9 @@ def get_spark(
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # ORDER BY ... LIMIT k under this is an in-memory top-k sized by k,
+        # not by the data: at Spark's ~2^31 default limit(10**9) OOMs the JVM
+        .config("spark.sql.execution.topKSortFallbackThreshold", str(1_000_000))
         .config("spark.sql.session.timeZone", "UTC")
         # INT96 (the legacy default) writes NO footer min/max for
         # timestamp columns, killing row-group skipping and the zone
@@ -154,7 +167,7 @@ def get_spark(
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

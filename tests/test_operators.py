@@ -377,6 +377,28 @@ def test_resolve_remap_driver_fast_path_matches_joins(spark, monkeypatch):
     assert fast == dist
 
 
+def test_resolve_remap_paths_agree_on_malformed_input(spark, monkeypatch):
+    # self-rows (old == new) are dropped and a repeated old id is
+    # rejected with the same ValueError on the driver and join paths
+    self_rows = spark.createDataFrame([(9, 7), (7, 7), (7, 4), (3, 3)], "old long, new long")
+    dup_old = spark.createDataFrame([(9, 7), (9, 4), (7, 1)], "old long, new long")
+
+    def run_both(remap):
+        out = []
+        for limit in (DD._CC_DRIVER_MAX_EDGES, 0):
+            monkeypatch.setattr(DD, "_CC_DRIVER_MAX_EDGES", limit)
+            try:
+                out.append({(r.old, r.new) for r in DD._resolve_remap(remap).collect()})
+            except ValueError as e:
+                out.append(str(e))
+        return out
+
+    driver, join = run_both(self_rows)
+    assert driver == join == {(9, 4), (7, 4)}
+    driver, join = run_both(dup_old)
+    assert driver == join and "more than one new id" in driver
+
+
 def test_winnowing_robust_to_local_edit(spark):
     """The winnowing property that makes it a dedup fingerprint: a
     single-word edit changes only the windows covering the edited
@@ -2842,6 +2864,41 @@ def test_takedown_everywhere_routes_all_store_kinds(spark, docs, emb, tmp_path):
     assert audit2 == {"hybrid": 0, "clusters": 0, "mv": 0, "vocab": 0}
     assert {tuple(r) for r in pmi_store_topk(spark, vocab).collect()} == want
 
+
+
+def test_takedown_everywhere_shared_path_runs_in_order(spark, tmp_path, monkeypatch):
+    # two routings that name one store path run one after the other
+    # instead of contending on the store's rewrite lock from the pool
+    import threading
+    import time
+
+    from libmr_spark.operators.takedown import takedown_everywhere
+
+    store = str(tmp_path / "shared_exact")
+    DD.dedup_incremental_exact(
+        spark, store, spark.createDataFrame([(i, f"text {i}") for i in range(20)], "doc_id long, text string")
+    )
+    real = DD.delete_from_incremental_store
+    lock, seen = threading.Lock(), {"live": 0, "peak": 0}
+
+    def watched(*args, **kwargs):
+        with lock:
+            seen["live"] += 1
+            seen["peak"] = max(seen["peak"], seen["live"])
+        try:
+            time.sleep(0.5)  # room for an overlapping task to enter
+            return real(*args, **kwargs)
+        finally:
+            with lock:
+                seen["live"] -= 1
+
+    monkeypatch.setattr(DD, "delete_from_incremental_store", watched)
+    victims = spark.createDataFrame([(i,) for i in range(0, 20, 4)], "doc_id long")
+    audit = takedown_everywhere(
+        spark, victims, table_stores={"a": (store, ("fps",)), "b": (store + "/", ("fps",))}
+    )
+    assert audit == {"a": 5, "b": 0}
+    assert seen["peak"] == 1
 
 def test_fleet_snapshot_lifecycle(spark, tmp_path):
     # capture -> save -> load roundtrip; post-snapshot commits

